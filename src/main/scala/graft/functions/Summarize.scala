@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.TopKByFrequency
 
 /** Keyword + summary NLP (P10 — the reference calls newspaper3k's
   * `article.nlp()`, rss_consumer.py:90-92,113-116,142-145). The published
@@ -9,10 +10,10 @@ import org.apache.spark.sql.functions._
   * scorer built from title-word and keyword overlap; re-implemented here
   * Spark-first.
   *
-  * `keywordsCol` is pure Catalyst expressions (oracle-able). The sentence
-  * summarizer needs per-sentence scoring against the document's own
-  * keyword set — expressed with higher-order array functions, still no
-  * UDF.
+  * `keywordsCol` is Catalyst expressions plus one native expression
+  * (oracle-able). The sentence summarizer needs per-sentence scoring
+  * against the document's own keyword set — expressed with higher-order
+  * array functions, still no UDF.
   */
 object Summarize {
 
@@ -22,28 +23,17 @@ object Summarize {
     filter(split(lower(c), "[^a-z0-9']+"),
       t => t =!= "" && !TextOps.isStopword(t))
 
-  /** Cap on tokens entering the in-row quadratic count: beyond this the
-    * O(n²) per-row cost dominates and the explode form is mandatory. TF
-    * over the first 2 000 content tokens is the newspaper-style "article
-    * lead" approximation; RssPipeline uses the explode form instead. */
+  /** Cap on tokens entering the in-row count: TF over the first 2 000
+    * content tokens, the newspaper-style "article lead" approximation,
+    * which bounds the per-row sort on unbounded documents. */
   val InRowTokenCap = 2000
 
-  /** Top-k TF keywords as array<string>, ties broken alphabetically.
-    * aggregate-free formulation: explode-free inside a single row via
-    * array ops is O(n²) on tokens, so the *query* form (per-doc explode +
-    * groupBy + window) in TextQueries.q18 is the scalable path; this
-    * column form exists for single-row/pipeline use and caps its input
-    * at InRowTokenCap tokens. */
-  def keywordsCol(c: Column, k: Int = 10): Column = {
-    val toks = slice(tfTokens(c), 1, InRowTokenCap)
-    val uniq = array_distinct(toks)
-    val counted = transform(uniq, u =>
-      struct(size(filter(toks, t => t === u)).as("c"), u.as("w")))
-    // sort by (count desc, word asc): sort ascending on (-c, w)
-    val sorted = array_sort(transform(counted, s =>
-      struct((-s.getField("c")).as("nc"), s.getField("w").as("w"))))
-    slice(transform(sorted, s => s.getField("w")), 1, k)
-  }
+  /** Top-k TF keywords as array<string>, ties broken alphabetically, in
+    * one row (graft.plans.TopKByFrequency) over the first InRowTokenCap
+    * tokens. The query form in TextQueries.q18 (explode + groupBy +
+    * window) computes the same ranking across a whole corpus. */
+  def keywordsCol(c: Column, k: Int = 10): Column =
+    TopKByFrequency.col(slice(tfTokens(c), 1, InRowTokenCap), k)
 
   /** Sentence split on ./!/? followed by whitespace. */
   def sentences(c: Column): Column =
@@ -56,9 +46,8 @@ object Summarize {
     summaryColWith(title, text, keywordsCol(text, 10), n)
 
   /** Summary against an externally-computed keyword array — lets a
-    * pipeline that already derived keywords the scalable way (explode +
-    * count + window, see RssPipeline) reuse them instead of re-running
-    * the quadratic in-row form. */
+    * pipeline that already derived its keywords (RssPipeline's tags)
+    * reuse them instead of counting the tokens again. */
   def summaryColWith(title: Column, text: Column, keywords: Column,
       n: Int = 5): Column = {
     val kws = array_union(keywords, tfTokens(title))

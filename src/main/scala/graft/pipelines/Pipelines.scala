@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Emoji, SentimentOps, Summarize, TextOps}
+import graft.plans.TopKByFrequency
 
 /** The reference's three Faust worker topologies (SURVEY.md §3 E1-E3)
   * re-hosted as single fused DataFrame pipelines. Where the reference
@@ -40,64 +41,49 @@ object RedditPipeline {
   /** E2 (reddit_consumer.py): post+comment sentiment → demojize+clean
     * comments → cross-comment bigram keywords → sink prep.
     *
-    * Comment enrichment needs two UDF calls per comment (VADER, demojize),
-    * which can't run inside array-lambda transforms — so comments are
-    * exploded once, enriched flat (codegen-friendly, parallel across all
-    * comments of all posts), and regrouped in original order. One shuffle
-    * on post id; at 100 TB this is the standard explode-enrich-regroup
-    * shape and partial aggregation keeps the regroup cheap. */
+    * Every step is row-local: comments are enriched in place inside the
+    * array (the two rule-engine UDFs run in the `transform` lambda) and
+    * the per-post top-5 bigrams come from one in-row `TopKByFrequency`,
+    * so a micro-batch plans as scan → project → dedup with few enough
+    * generated classes to stay in Spark's codegen cache from batch to
+    * batch. An empty comment list stays empty and a null one stays
+    * null, as in the reference. */
   def apply(posts: DataFrame): DataFrame = {
     val spark = posts.sparkSession
     import spark.implicits._
 
-    val withPostSentiment = posts
+    // keywords: stopword-filter each comment, flatten ACROSS comments
+    // (itertools.chain, reddit_consumer.py:149 — bigrams span comment
+    // boundaries), adjacent unordered bigrams, per-post top-5 by
+    // (count desc, a asc, b asc), flatten + order-preserving distinct
+    // (reddit_consumer.py:150-151)
+    val tokens = flatten(transform($"comments",
+      c => TextOps.dropStopwords(TextOps.tokenize(c.getField("text")))))
+    val top = TopKByFrequency.col(TextOps.adjacentBigrams(tokens), 5)
+    val keywords = array_distinct(flatten(transform(top,
+      p => array(p.getField("a"), p.getField("b")))))
+
+    posts
       // S7: ingestion-log parity (ingestion_logger.py) — same observable
       // metric the twitter flow has; queryable via QueryExecutionListener
       .observe("reddit_ingest", count(lit(1)).as("n_ingested"))
       .withColumn("sentiment", SentimentOps.vader($"title"))
-
-    // explode → enrich each comment → regroup in original order
-    val exploded = withPostSentiment
-      .select($"id".as("_pid"), posexplode_outer($"comments").as(Seq("_pos", "_c")))
-      .withColumn("_sent", SentimentOps.vader($"_c.text"))
       // VADER first (raw text), then demojize + clean_text
       // (reddit_consumer.py:112-116 before :129-132)
-      .withColumn("_text", TextOps.cleanText(Emoji.demojizeCol($"_c.text")))
-    val regrouped = exploded
-      .groupBy($"_pid")
-      .agg(array_sort(collect_list(struct($"_pos", $"_text", $"_sent"))).as("_cs"))
-      .select($"_pid",
-        transform($"_cs", c => struct(
-          c.getField("_text").as("text"),
-          c.getField("_sent").as("sentiment"))).as("comments"))
-
-    val enriched = withPostSentiment.drop("comments")
-      .join(regrouped, $"id" === $"_pid", "left").drop("_pid")
-
-    // keywords: stopword-filter each comment, flatten ACROSS comments
-    // (itertools.chain, reddit_consumer.py:149 — bigrams span comment
-    // boundaries), adjacent unordered bigrams, per-post top-5, flatten
-    // + order-preserving distinct (reddit_consumer.py:150-151)
-    val tokens = flatten(transform($"comments",
-      c => TextOps.dropStopwords(TextOps.tokenize(c.getField("text")))))
-    val pairs = enriched
-      .select($"id", explode(TextOps.adjacentBigrams(tokens)).as("p"))
-      .groupBy($"id", $"p.a", $"p.b").agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"id").orderBy($"c".desc, $"a".asc, $"b".asc)
-    val kw = pairs.withColumn("rk", row_number().over(w)).filter($"rk" <= 5)
-      .groupBy($"id")
-      .agg(array_distinct(flatten(transform(
-        array_sort(collect_list(struct($"rk", $"a", $"b"))),
-        p => array(p.getField("a"), p.getField("b"))))).as("keywords"))
-
-    enriched.join(kw, Seq("id"), "left")
+      .withColumn("comments", transform($"comments", c => struct(
+        TextOps.cleanText(Emoji.demojizeCol(c.getField("text"))).as("text"),
+        SentimentOps.vader(c.getField("text")).as("sentiment"))))
+      .withColumn("keywords", keywords)
+      // a post with no bigram gets null keywords; a separate projection,
+      // so the keyword chain is computed once per row
+      .withColumn("keywords", when(size($"keywords") > 0, $"keywords"))
       .withColumn("created",
         to_timestamp($"created", "yyyy-MM-dd HH:mm:ss"))
       .withColumn("insert_date", current_timestamp())
-      // compound unique key (id, insert_date): append-versioned snapshots
-      // (reddit_consumer.py:54-55)
-      .dropDuplicates("id", "insert_date")
+      // the reference's compound unique key is (id, insert_date):
+      // append-versioned snapshots (reddit_consumer.py:54-55). One batch
+      // has one insert_date, so within a batch that key is `id`.
+      .dropDuplicates("id")
   }
 }
 
@@ -124,14 +110,16 @@ object RssPipeline {
     val spark = feeds.sparkSession
     import spark.implicits._
 
-    val fresh = feeds.join(seenLinks.select($"link").distinct(),
-      Seq("link"), "left_anti")
+    // an anti-join's result does not depend on duplicates on its right
+    // side, so the seen set needs no distinct
+    val fresh = feeds.join(seenLinks.select($"link"), Seq("link"), "left_anti")
       // S7: ingestion-log parity — counts FRESH rows, i.e. what survives
       // the seen-link dedup (the number the reference's log line reports)
       .observe("rss_ingest", count(lit(1)).as("n_fresh"))
-      // unique index (rss_consumer.py:53) applied BEFORE the NLP stages:
-      // one row per link survives either way, and enriching post-dedup
-      // avoids paying the keyword/summary cost for rows the sink drops
+      // unique index (rss_consumer.py:53), applied once and BEFORE the
+      // NLP stages: everything after it is row-local, so one row per
+      // link survives, and no keyword/summary cost is paid for rows the
+      // sink would drop
       .dropDuplicates("link")
 
     // branch F2: no content → treat content as HTML, strip tags
@@ -140,27 +128,13 @@ object RssPipeline {
         .otherwise(when($"content".contains("<"), stripHtml($"content"))
           .otherwise($"content")))
 
-    // TF tags the scalable way — explode → count → per-link top-10 window
-    // — instead of the in-row quadratic keywordsCol: articles are
-    // unbounded, and O(tokens²) per row degrades with document length
-    // while this shape spreads each article across the cluster.
-    val toks = withContent
-      .select($"link", explode(Summarize.tfTokens($"content")).as("t"))
-    val counts = toks.groupBy($"link", $"t").agg(count(lit(1)).as("c"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"link").orderBy($"c".desc, $"t".asc)
-    val tags = counts.withColumn("rk", row_number().over(w))
-      .filter($"rk" <= 10)
-      .groupBy($"link")
-      .agg(transform(array_sort(collect_list(struct($"rk", $"t"))),
-        p => p.getField("t")).as("tags"))
-
-    // NLP: tags joined back (empty array for token-free content, matching
-    // keywordsCol), sentence-scored summary reusing the same keyword set
+    // NLP: in-row TF top-10 tags (empty array for token-free content,
+    // matching keywordsCol), sentence-scored summary reusing the same
+    // keyword set
     val withNlp = withContent
-      .join(tags, Seq("link"), "left")
-      .withColumn("tags",
-        coalesce($"tags", array().cast("array<string>")))
+      .withColumn("tags", coalesce(
+        TopKByFrequency.col(Summarize.tfTokens($"content"), 10),
+        array().cast("array<string>")))
       .withColumn("summary",
         when(length(coalesce($"summary", lit(""))) > 0, stripHtml($"summary"))
           .otherwise(Summarize.summaryColWith($"title", $"content", $"tags", 5)))
@@ -190,6 +164,5 @@ object RssPipeline {
     withNlp
       .withColumn("published", parsedPublished)
       .withColumn("insert_date", current_timestamp())
-      .dropDuplicates("link") // unique index, rss_consumer.py:53
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ExpressionSet
 
 /** S3+S5: the reference's MongoDB sinks are "insert, unique index drops
   * duplicates" (DuplicateKeyError → logged & dropped, e.g.
@@ -24,8 +25,9 @@ object IdempotentSink {
       tieBreak: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val deduped =
-      if (tieBreak.isEmpty) batch.dropDuplicates(keys)
-      else {
+      if (tieBreak.isEmpty) {
+        if (uniqueOn(batch, keys)) batch else batch.dropDuplicates(keys)
+      } else {
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.functions.{col, row_number}
         val w = Window.partitionBy(keys.map(col): _*)
@@ -45,6 +47,19 @@ object IdempotentSink {
   def foreachBatchWriter(path: String, keys: Seq[String])
       : (DataFrame, Long) => Unit =
     (batch, _) => append(batch, path, keys)
+
+  /** True when the optimizer proves `df` holds at most one row per
+    * `keys` (every flow ends in a dropDuplicates on its key): a second
+    * dropDuplicates would plan a second Aggregate on the same key, which
+    * Spark does not remove. Keys are matched to output columns by exact
+    * name; anything unproven is deduplicated. */
+  private[graft] def uniqueOn(df: DataFrame, keys: Seq[String]): Boolean = {
+    val plan = df.queryExecution.optimizedPlan
+    val keyAttrs = keys.flatMap(k => plan.output.find(_.name == k))
+    val keySet = ExpressionSet(keyAttrs)
+    keyAttrs.length == keys.length &&
+      plan.distinctKeys.exists(_.forall(keySet.contains))
+  }
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)

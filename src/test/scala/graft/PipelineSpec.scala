@@ -68,6 +68,46 @@ class PipelineSpec extends AnyFunSuite {
       kws.containsSlice(Seq("query", "engine")))
   }
 
+  test("reddit pipeline: empty and null comment lists, posts with no bigram") {
+    import spark.implicits._
+    val commentsType = ArrayType(StructType(Seq(
+      StructField("text", StringType), StructField("score", LongType))))
+    val posts = spark.createDataFrame(
+      java.util.List.of(
+        Row("empty", "Nothing said", "2022-04-01 12:30:00", 1L, Seq()),
+        Row("null", "No comment field", "2022-04-01 12:30:00", 1L, null),
+        // one surviving token per comment: the only bigram spans the
+        // comment boundary ("spark", "fast"), so keywords are that pair
+        Row("span", "Across", "2022-04-01 12:30:00", 1L,
+          Seq(Row("the spark", 1L), Row("fast!", 2L))),
+        // a single non-stopword token in total: no bigram at all
+        Row("lone", "Alone", "2022-04-01 12:30:00", 1L,
+          Seq(Row("the engine", 1L)))),
+      StructType(Seq(
+        StructField("id", StringType),
+        StructField("title", StringType),
+        StructField("created", StringType),
+        StructField("score", LongType),
+        StructField("comments", commentsType))))
+
+    val out = RedditPipeline(posts).collect()
+      .map(r => r.getAs[String]("id") -> r).toMap
+    assert(out.size == 4)
+    // the reference keeps an empty comment list empty; a null list stays
+    // null — no phantom comment either way
+    assert(seqOf[Row](out("empty"), "comments").isEmpty)
+    assert(out("null").isNullAt(out("null").fieldIndex("comments")))
+    for (id <- Seq("empty", "null", "lone")) {
+      val r = out(id)
+      assert(r.isNullAt(r.fieldIndex("keywords")), s"$id keywords")
+      assert(r.getAs[Row]("sentiment") != null, s"$id post sentiment")
+    }
+    assert(seqOf[String](out("span"), "keywords") == Seq("fast", "spark"))
+    val lone = seqOf[Row](out("lone"), "comments")
+    assert(lone.map(_.getAs[String]("text")) == Seq("the engine"))
+    assert(lone.head.getAs[Row]("sentiment") != null)
+  }
+
   test("rss pipeline: anti-join dedup, html strip, nlp fill, date branches") {
     import spark.implicits._
     val feeds = Seq(

@@ -48,6 +48,24 @@ class SourcesSpec extends AnyFunSuite {
     assert(rows(1).getString(1) == "dup-in-batch")
   }
 
+  test("idempotent sink: its own dedup runs only when the batch is not provably unique") {
+    import spark.implicits._
+    val df = Seq(("k1", "v1"), ("k1", "v2"), ("k2", "v3")).toDF("id", "payload")
+    assert(!IdempotentSink.uniqueOn(df, Seq("id")))
+    assert(IdempotentSink.uniqueOn(df.dropDuplicates("id"), Seq("id")))
+    // unique on a subset of the keys ⇒ unique on the keys
+    assert(IdempotentSink.uniqueOn(df.dropDuplicates("id"), Seq("id", "payload")))
+    assert(!IdempotentSink.uniqueOn(df.dropDuplicates("id", "payload"), Seq("id")))
+    // a renamed key is not the key
+    assert(!IdempotentSink.uniqueOn(
+      df.dropDuplicates("id").withColumnRenamed("payload", "id2")
+        .withColumn("id", lit("x")), Seq("id")))
+    // a batch the sink cannot prove unique still collapses to one row per key
+    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
+    IdempotentSink.append(df, dir, Seq("id"))
+    assert(spark.read.parquet(dir).count() == 2)
+  }
+
   test("HTTP fetch: real JDK client against a loopback server; failures drop") {
     import spark.implicits._
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
