@@ -138,23 +138,9 @@ object Bench {
     val stdout = System.out
     System.setOut(System.err) // everything but the final JSON → stderr
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      org.apache.spark.sql.GraftBridge.installOptimizerRule(s,
-        graft.plans.TopKWindowRule)
-      org.apache.spark.sql.GraftBridge.installOptimizerRule(s,
-        graft.plans.BandJoinRule)
-      org.apache.spark.sql.GraftBridge.installOptimizerRule(s,
-        graft.plans.IntervalJoinRule)
-      org.apache.spark.sql.GraftBridge.installStrategy(s,
-        graft.plans.AsOfJoinStrategy)
+      val s = GraftSession.local(cpus)
       // Warm the JVM/codegen paths once so the first timed query doesn't
       // absorb JIT + classloading cost (measured ~4s on the first query).
       try {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,8 @@ object Verify {
     // filtered to match so scripts/check.py checks just those).
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.BandJoinRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.IntervalJoinRule)
-    org.apache.spark.sql.GraftBridge.installStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Self-check (round-15 verdict #1): a silently-empty registry or a
     // missing per-query output dir must be LOUD — round 15 shipped an

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.QueryModule
 import graft.functions.TextOps
@@ -1562,15 +1561,20 @@ object DedupQueries extends QueryModule {
     * family reads it, but the prefix-filter build measured ~3.9 s of
     * q199's 4.22 s cold at sf0.1, re-paid per fresh session; the
     * durable stage turns that into a columnar read. Bump the version
-    * on any change to buildPrefixPairs or the 0.8 threshold rule. */
+    * on any change to buildPrefixPairs; the threshold is in the salt. */
   private val prefixPairCache = new SessionCache
   private[operators] def prefixPairs(s: SparkSession, dir: String)
       : DataFrame =
     prefixPairCache.get(s, dir)(
       DurableStage.get(s, "prefix_pairs", 2,
         Seq(s"$dir/documents.parquet"),
-        salt = "tau=0.8;prefix-filter")(
+        salt = s"tau=$PrefixTauNum/$PrefixTauDen;prefix-filter")(
         buildPrefixPairs(s, dir)))
+
+  /** q199's Jaccard threshold τ = PrefixTauNum / PrefixTauDen, kept as
+    * two integers so every threshold test stays exact integer math. */
+  private val PrefixTauNum = 4
+  private val PrefixTauDen = 5
 
   private def buildPrefixPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1603,14 +1607,16 @@ object DedupQueries extends QueryModule {
     // shipped two document-sized payloads across the exchange. The
     // arrays are re-attached AFTER the (doc_a, doc_b) pair set is
     // final, by two joins against the barriered `ordered` frame.
-    val prefLen = $"n" - expr("(4 * n + 4) div 5") + 1
+    val prefLen = $"n" -
+      expr(s"($PrefixTauNum * n + ${PrefixTauDen - 1}) div $PrefixTauDen") + 1
     val pre = ordered.select($"doc_id", $"n",
       explode(slice($"toks", lit(1), prefLen)).as("term"))
     val cand = pre.select($"term", $"doc_id".as("doc_a"), $"n".as("na"))
       .join(pre.select($"term", $"doc_id".as("doc_b"), $"n".as("nb")),
         Seq("term"))
       .filter($"doc_a" < $"doc_b")
-      .filter(least($"na", $"nb") * 5 >= greatest($"na", $"nb") * 4)
+      .filter(least($"na", $"nb") * PrefixTauDen >=
+        greatest($"na", $"nb") * PrefixTauNum)
       .select($"doc_a", $"doc_b", $"na", $"nb")
       .dropDuplicates("doc_a", "doc_b")
     val withSets = cand
@@ -1621,7 +1627,7 @@ object DedupQueries extends QueryModule {
     val inter = size(array_intersect($"ta", $"tb")).cast("long")
     withSets
       .select($"doc_a", $"doc_b", inter.as("i"), $"na", $"nb")
-      .filter($"i" * 5 >= ($"na" + $"nb" - $"i") * 4)
+      .filter($"i" * PrefixTauDen >= ($"na" + $"nb" - $"i") * PrefixTauNum)
   }
 
   /** Pagination stitching (q272) — web extraction splits one logical

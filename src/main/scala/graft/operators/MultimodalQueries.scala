@@ -759,8 +759,6 @@ object MultimodalQueries extends QueryModule {
         t: String, bad: String) =
       s"named_struct('o', $o, 'd', $d, 'f', $f, 'e', $e, 'n', $n, " +
         s"'t', $t, 'b', $bad)"
-    val keep = st("acc.o", "acc.d", "acc.f", "acc.e", "acc.n",
-      "acc.t", "acc.b")
     val lctb = s"IF(${b("acc.o + 9")} >= 128, 3 * CAST(pow(2, " +
       s"${b("acc.o + 9")} % 8 + 1) AS BIGINT), CAST(0 AS BIGINT))"
     val walk =

@@ -797,13 +797,6 @@ object QualityQueries extends QueryModule {
       .orderBy($"lang")
   }
 
-  /** Token-budget buckets: 16 range buckets keyed on the FIRST hex char
-    * of the rank key. Lowercase hex sorts lexicographically in value
-    * order ('0'..'9' < 'a'..'f'), so the bucket is a prefix of the sort
-    * key and ordering by (bucket, rk) IS ordering by rk — the property
-    * the two-phase prefix sum below depends on. */
-  private val TbBuckets = 16
-
   /** Per-source token-budget sampling (q84): keep each source's docs in
     * a deterministic md5-shuffled order until a token budget is hit —
     * the "cap every source at N tokens" step of corpus mixing (the
@@ -816,11 +809,13 @@ object QualityQueries extends QueryModule {
     * classic DISTRIBUTED PREFIX SUM:
     *
     *   1. bucket every doc by the first hex char of its rank key — 16
-    *      range buckets aligned with the sort order (see TbBuckets);
+    *      range buckets aligned with the sort order (lowercase hex sorts
+    *      lexicographically in value order, so the bucket is a prefix of
+    *      the sort key and ordering by (bucket, rk) IS ordering by rk);
     *   2. one partial-agg shuffle computes per-(source, bucket) token
     *      sums — a |sources|×16-row frame, metadata-scale at any corpus
-    *      size (grow TbBuckets with the corpus to keep bucket windows
-    *      bounded: 256 buckets = 2 hex chars, etc.);
+    *      size (grow the bucket key with the corpus to keep bucket
+    *      windows bounded: 256 buckets = 2 hex chars, etc.);
     *   3. a window over THAT tiny frame turns sums into per-bucket
     *      starting offsets, broadcast back onto the docs;
     *   4. the per-doc running sum now only needs a window partitioned

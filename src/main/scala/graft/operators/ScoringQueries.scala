@@ -351,7 +351,6 @@ object ScoringQueries extends QueryModule {
   def qKneserNeyNll(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val folded = foldedTokenArrays(s, dir)
-    val toks = folded.select($"doc_id", explode($"tk").as("term"))
     val bi = inRowBigrams(folded)
     val biCnt = bi.groupBy($"prev", $"term")
       .agg(count(lit(1)).as("c_bi"))
@@ -1025,7 +1024,6 @@ object ScoringQueries extends QueryModule {
     * conditional aggregate; every number after is closed-form on a
     * 1-row frame — exact integers except the two divisions. */
   def qMcnemarGates(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     mcnemarOf(Tables.documents(s, dir)
       .select(QualityQueries.gopherPassesExpr.as("passes"),
         (lit(1.0) / (lit(1.0) + exp(-qualityZ)) >= 0.5).as("keep")))
@@ -2637,7 +2635,6 @@ object ScoringQueries extends QueryModule {
     * ((R·Σp² − (Σp)²)/R² per doc — the exact-integer form; the paper
     * plots the std, a monotone transform). */
   def qCartography(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     cartographyOf(corpusLrBase(s, dir), Some(stagedLrTrajectory(s, dir)))
   }
 
@@ -3005,7 +3002,6 @@ object ScoringQueries extends QueryModule {
     * that silently drops one class's positives is how data diets go
     * wrong — the share column is the audit). */
   def qEl2nPruning(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     el2nOf(corpusLrBase(s, dir), Some(stagedLrTrajectory(s, dir)))
   }
 
@@ -3050,7 +3046,6 @@ object ScoringQueries extends QueryModule {
     * never ride float dust. One corpus pass with 8 broadcast weight
     * rows; per-class exact-integer aggregates. */
   def qForgetting(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     forgettingOf(corpusLrBase(s, dir), Some(stagedLrTrajectory(s, dir)))
   }
 
@@ -3102,7 +3097,6 @@ object ScoringQueries extends QueryModule {
     * per-round terms quantize to 1e-6 longs so the ranking never
     * rides float dust; top-10 reads through the heap rewrite. */
   def qSelfInfluence(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     selfInfluenceOf(corpusLrBase(s, dir), Some(stagedLrTrajectory(s, dir)))
   }
 

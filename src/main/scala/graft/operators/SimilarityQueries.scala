@@ -38,12 +38,6 @@ object SimilarityQueries extends QueryModule {
   private def norm(a: Column): Column =
     graft.plans.VectorExpressions.l2norm(a)
 
-  /** HOF formulation kept for the equivalence test. */
-  private[operators] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-  private[operators] def normHof(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v))
-
   /** Vectors with embedding cast float→double + precomputed norm. */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1653,7 +1647,7 @@ object SimilarityQueries extends QueryModule {
         val cand = it.map(r => (r.getAs[Long]("vec_id"),
           r.getAs[Double]("cos"),
           r.getAs[scala.collection.Seq[Double]]("v").toArray)).toArray
-        var remaining = cand.sortBy(c => (-c._2, c._1)).toBuffer
+        val remaining = cand.sortBy(c => (-c._2, c._1)).toBuffer
         val selected = scala.collection.mutable.Buffer
           .empty[(Long, Double, Array[Double], Double)]
         val k = math.min(5, remaining.length)

@@ -1134,18 +1134,14 @@ object TimeQueries extends QueryModule {
   private val IvMaxSpanUs = 86400000000L
 
   /** Child session for the naive-spelled interval queries: the width
-    * conf must not leak into the caller's plans (ADVICE r13), and a
-    * `newSession()` does NOT inherit `experimental.extraOptimizations`
-    * (fresh SessionState), so the rule is re-installed explicitly —
-    * without it the naive spelling still answers correctly but
-    * silently plans as the BNLJ the rule exists to kill. */
+    * conf must not leak into the caller's plans (ADVICE r13). The child
+    * inherits the session extensions, so `IntervalJoinRule` is already
+    * installed and only the width (and span) confs are set here. */
   private def ivChildSession(s0: SparkSession,
       withMaxSpan: Boolean = false): SparkSession = {
     val s = s0.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s,
-      graft.plans.IntervalJoinRule)
     // W = 6 h for the preserved-side forms too: a 10× width sweep
-    // (Drill, BASELINE.md round-14 note) measured 6 h fastest
+    // (BASELINE.md round-14 note) measured 6 h fastest
     // (29.4 s) vs 12 h (34.7) and 24 h (34.0) at identical 128M-pair
     // output — the margin fan-out S = ceil(maxSpan/W) matters less
     // than per-bucket density, and the cost class is the OUTPUT
@@ -1796,8 +1792,6 @@ object TimeQueries extends QueryModule {
     * published projection keeps the unambiguous columns. */
   def qAsofSql(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    org.apache.spark.sql.GraftBridge.applyExtensions(s,
-      new graft.plans.GraftExtensions()(_))
     val ev = Tables.events(s, dir)
     ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts", $"value")
@@ -2932,7 +2926,6 @@ object TimeQueries extends QueryModule {
     * intercept pass. Slopes/intercepts can be negative → floor-form
     * presentation rounding. */
   def qTheilSen(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     theilSenOf(dailyIndexed(s, dir))
   }
 
@@ -2976,7 +2969,6 @@ object TimeQueries extends QueryModule {
     * windows — audited bounded), σ is one scalar frame broadcast
     * back. */
   def qPageHinkley(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     pageHinkleyOf(dailyIndexed(s, dir))
   }
 
@@ -3024,7 +3016,6 @@ object TimeQueries extends QueryModule {
     * recursive CTE carrying the same list state. Floor-form rounding
     * (trend/seasonal go negative). */
   def qHoltWinters(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     holtWintersOf(dailyIndexed(s, dir))
   }
 

@@ -28,9 +28,10 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *
   * Guards: single row_number window expression, non-empty ORDER BY, a
   * `rn <= literal` (or equivalent) conjunct with 0 < k ≤ MaxK, struct
-  * output (needs ≥ 1 child column). An intervening WindowGroupLimit —
-  * inserted by Spark's own InferWindowGroupLimit before user rules run —
-  * is subsumed and stripped.
+  * output (needs ≥ 1 child column). GraftExtensions injects the rule
+  * into the fixed-point operator-optimization batch, which runs before
+  * Spark's InferWindowGroupLimit; an intervening WindowGroupLimit (a plan
+  * optimized without the rule) is subsumed and stripped.
   */
 object TopKWindowRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -68,8 +69,8 @@ object TopKWindowRule extends Rule[LogicalPlan] with PredicateHelper {
       if (ks.isEmpty || ks.min <= 0 || ks.min > MaxK) f
       else {
         val k = ks.min
-        // Spark's InferWindowGroupLimit may already have trimmed below
-        // the Window; the aggregate subsumes it
+        // a plan Spark already optimized may carry InferWindowGroupLimit's
+        // trim below the Window; the aggregate subsumes it
         val child = wchild match {
           case wgl: WindowGroupLimit => wgl.child
           case c => c
@@ -89,7 +90,15 @@ object TopKWindowRule extends Rule[LogicalPlan] with PredicateHelper {
         val partAttrs: Seq[Attribute] = part.collect {
           case a: AttributeReference => a
         }.distinct
-        val aggregate = Aggregate(part, partAttrs :+ aggAlias, child)
+        // A global top-k (no PARTITION BY) heaps the k rows that a Limit
+        // over a Sort keeps. Spark plans that as TakeOrderedAndProject,
+        // whose single-partition output the aggregate reads with no
+        // exchange of its own — the shape InferWindowGroupLimit gives the
+        // same window.
+        val input =
+          if (part.nonEmpty) child
+          else Limit(Literal(k), Sort(order, global = true, child))
+        val aggregate = Aggregate(part, partAttrs :+ aggAlias, input)
         val structType = dataStruct.dataType.asInstanceOf[StructType]
         val posAttr =
           AttributeReference("_topk_pos", IntegerType, nullable = false)()

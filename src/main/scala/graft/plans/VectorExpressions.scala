@@ -233,12 +233,4 @@ object VectorExpressions {
     GraftBridge.column(L2Norm(e(a)))
   def sortedSparseDotMicro(a: Column, b: Column): Column =
     GraftBridge.column(SortedSparseDotMicro(e(a), e(b)))
-
-  /** Register as SQL functions (usable from spark.sql). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)))
-    GraftBridge.registerFunction(spark, "l2_norm",
-      exprs => L2Norm(exprs.head))
-  }
 }

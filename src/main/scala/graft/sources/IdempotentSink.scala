@@ -43,11 +43,6 @@ object IdempotentSink {
     fresh.write.mode("append").parquet(path)
   }
 
-  /** foreachBatch adapter for Structured Streaming sinks. */
-  def foreachBatchWriter(path: String, keys: Seq[String])
-      : (DataFrame, Long) => Unit =
-    (batch, _) => append(batch, path, keys)
-
   /** True when the optimizer proves `df` holds at most one row per
     * `keys` (every flow ends in a dropDuplicates on its key): a second
     * dropDuplicates would plan a second Aggregate on the same key, which

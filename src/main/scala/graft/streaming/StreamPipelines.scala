@@ -58,15 +58,6 @@ object StreamPipelines {
       .select(col("w.start").as("bucket"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** RSS-style streaming link dedup (F1+T1): the reference refreshes its
-    * seen-link set on a timer (rss_consumer.py:63-65, frozen by a bug);
-    * the streaming form is watermarked keyed dedup — state bounded, no
-    * driver-side set. */
-  def rssDedup(feeds: DataFrame): DataFrame =
-    feeds
-      .withWatermark("fetched_at", "30 minutes")
-      .dropDuplicatesWithinWatermark("link")
-
   /** Stream-stream interval join — the streaming twin of the batch
     * range/as-of joins (q27/q29): each purchase joins the same user's
     * clicks from the preceding 5 minutes. Both sides are watermarked, so

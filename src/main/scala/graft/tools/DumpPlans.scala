@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Writes PLANS.md: the formatted physical plan of each headline query —
@@ -216,21 +215,7 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/root/repo/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.BandJoinRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.IntervalJoinRule)
-    org.apache.spark.sql.GraftBridge.installStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
+    val spark = graft.GraftSession.local(4)
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `graft.tools.DumpPlans` on `$sfDir`. The plan\n")

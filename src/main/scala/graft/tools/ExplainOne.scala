@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Round-16 plan evidence: writes `.explain("formatted")` for the named
@@ -14,22 +13,8 @@ object ExplainOne {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.BandJoinRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.IntervalJoinRule)
-    org.apache.spark.sql.GraftBridge.installStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

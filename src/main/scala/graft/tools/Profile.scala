@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler: runs each SparkEntry query twice in one JVM and
   * prints both timings — separates plan/codegen warmup from steady-state
   * execution. Not part of the driver contract. */
@@ -10,23 +8,8 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
     // match Bench's session shape: core count from SPARK_GRAFT_CPUS
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same session shape as Bench, so profiled plans match benched plans
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.BandJoinRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.IntervalJoinRule)
-    org.apache.spark.sql.GraftBridge.installStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
+    val spark = graft.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.contains(n) }
     qs.foreach { case (name, fn) =>

@@ -2,7 +2,6 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4 moved
   * `Column.expr` behind org.apache.spark.sql.classic.ExpressionUtils).
@@ -21,10 +20,6 @@ object GraftBridge {
     * are ordinary unresolved nodes the analyzer then resolves). */
   def resolvedExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 
   /** Stable per-session identifier (private[sql] in Spark 4) — used as a
     * cache key that survives GC, unlike identityHashCode. */
@@ -38,38 +33,8 @@ object GraftBridge {
   def scalarSubquery(df: Dataset[_]): Expression =
     catalyst.expressions.ScalarSubquery(df.queryExecution.analyzed)
 
-  /** Append an optimizer rule to an already-built session (the
-    * extraOptimizations batch runs after the main optimizer). Idempotent. */
-  def installOptimizerRule(spark: SparkSession,
-      rule: Rule[LogicalPlan]): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(rule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ rule
-  }
-
   /** Wrap a logical plan as a DataFrame (Dataset.ofRows is
     * private[sql]) — the entry point for custom LogicalPlan nodes. */
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Append a planner strategy to an already-built session. Idempotent. */
-  def installStrategy(spark: SparkSession,
-      st: execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(st))
-      cs.experimental.extraStrategies =
-        cs.experimental.extraStrategies :+ st
-  }
-
-  /** Apply an extensions object's injected scalar AND table functions
-    * to an already-built session (getOrCreate ignores withExtensions
-    * when a session exists — e.g. shared test sessions). */
-  def applyExtensions(spark: SparkSession,
-      ext: SparkSessionExtensions => Unit): Unit = {
-    val e = new SparkSessionExtensions
-    ext(e)
-    e.registerFunctions(spark.sessionState.functionRegistry)
-    e.registerTableFunctions(spark.sessionState.tableFunctionRegistry)
-  }
 }

@@ -60,9 +60,12 @@ class BandJoinSpec extends AnyFunSuite {
 
   // ---- outer/semi/anti band joins -------------------------------------
 
-  /** The same query under a rule-free session — the naive twin. */
+  /** The same query under a rule-free session — the naive twin. A child
+    * session inherits the extensions, so the rule is excluded by conf. */
   private def naiveSession = {
     val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      graft.plans.BandJoinRule.ruleName)
     s
   }
 

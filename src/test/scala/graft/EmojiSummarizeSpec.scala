@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{Emoji, Summarize}
-import org.apache.spark.sql.functions._
 
 class EmojiSpec extends AnyFunSuite {
 

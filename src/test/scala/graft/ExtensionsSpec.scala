@@ -1,20 +1,14 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.GraftBridge
-import graft.plans.GraftExtensions
+import org.apache.spark.sql.functions.abs
 
 /** The full SQL-callable function surface installed by GraftExtensions:
   * same expression trees as the DataFrame API, reachable from pure SQL. */
 class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = TestSpark.spark
-    GraftBridge.applyExtensions(s, new GraftExtensions()(_))
-    s
-  }
+  lazy val spark = TestSpark.spark
 
   test("text surface callable from spark.sql") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.lit
     val raw = "Hello   WORLD [ref] 42x !!"
     val r = spark.sql(
@@ -128,6 +122,27 @@ class ExtensionsSpec extends AnyFunSuite {
         "user_id", "ts", Some(3600000000L))
       .agg(count(col("click_value"))).head().getLong(0)
     assert(tolRows == tolTwin)
+  }
+
+  test("a child session inherits the rules and the SQL surface") {
+    // no install call anywhere: newSession() hands the extensions on
+    val s = TestSpark.spark.newSession()
+    import s.implicits._
+    val l = Seq(1L, 5L, 9L).toDF("a")
+    val r = Seq(2L, 8L, 20L).toDF("b")
+    val band = l.join(r, abs($"a" - $"b") <= 1L)
+    val plan = band.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin"),
+      s"band join planned as BNLJ in a child session:\n$plan")
+    assert(band.as[(Long, Long)].collect().toSet == Set((1L, 2L), (9L, 8L)))
+    Seq((1L, 10L, 1.0), (1L, 30L, 2.0)).toDF("k", "t", "lv")
+      .createOrReplaceTempView("child_asof_l")
+    Seq((1L, 5L, 7.0), (1L, 25L, 8.0)).toDF("k", "t", "rv")
+      .createOrReplaceTempView("child_asof_r")
+    val asof = s.sql(
+      """SELECT lv, rv FROM asof_join('child_asof_l', 'child_asof_r', 'k', 't')
+        |ORDER BY lv""".stripMargin).as[(Double, Double)].collect().toSeq
+    assert(asof == Seq((1.0, 7.0), (2.0, 8.0)))
   }
 
   test("mg_sketch callable from spark.sql with SQL-side membership test") {

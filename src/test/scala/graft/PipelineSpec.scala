@@ -38,7 +38,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("reddit pipeline: nested comment sentiment, cleaned text, cross-comment bigrams") {
-    import spark.implicits._
     val commentsType = ArrayType(StructType(Seq(
       StructField("text", StringType), StructField("score", LongType))))
     val posts = spark.createDataFrame(
@@ -69,7 +68,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("reddit pipeline: empty and null comment lists, posts with no bigram") {
-    import spark.implicits._
     val commentsType = ArrayType(StructType(Seq(
       StructField("text", StringType), StructField("score", LongType))))
     val posts = spark.createDataFrame(

@@ -150,7 +150,6 @@ class QualitySpec extends AnyFunSuite {
   }
 
   test("dataset card: one row, counts consistent with the table") {
-    import spark.implicits._
     val card = QualityQueries.qDatasetCard(spark, sf).collect()
     assert(card.length == 1)
     val r = card.head

@@ -189,8 +189,6 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("q252/q266: no corpus-sized global window survives") {
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
     // q266: the whole top-51 read is ONE heap aggregate — no Window
     // at all (the round-8 form's `rk = k+1` branch dodged the heap
     // rewrite and kept a full-corpus row_number window alive).

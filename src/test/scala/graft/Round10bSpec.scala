@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Row
 import graft.operators._
 
 /** Round-10 operator pins: the TopKWindowRule partitioning-propagation
@@ -39,8 +38,6 @@ class Round10bSpec extends AnyFunSuite {
   }
 
   test("q12 stays at 3 exchanges WITH the heap rewrite installed") {
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
     val df = SparkEntry.queries("q12_bigrams_topk")(spark, sf)
     val p = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

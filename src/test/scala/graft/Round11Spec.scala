@@ -487,7 +487,6 @@ class Round11Spec extends AnyFunSuite {
   }
 
   test("q334: the native operator agrees with q27's compositional form row-for-row") {
-    import spark.implicits._
     val sf = "/root/testdata/sf0.001"
     val native = TimeQueries.qAsofNative(spark, sf).collect().toSeq
     val composed = SparkEntry.queries("q27_asof_join")(spark, sf)

@@ -20,7 +20,6 @@ class Round12Spec extends AnyFunSuite {
     // is that the leaf RDDs are RELIABLY checkpointed (a checkpoint
     // file exists) and that results are bit-identical to the local
     // form.
-    import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ckpt_").toString
     val s2 = spark.newSession()

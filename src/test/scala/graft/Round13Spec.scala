@@ -54,7 +54,6 @@ class Round13Spec extends AnyFunSuite {
   }
 
   test("asof forward/nearest still plan as the single AsOfJoinExec") {
-    import spark.implicits._
     val df = TimeQueries.queries("q350_asof_forward")(spark, sf)
     df.collect()
     def find(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
@@ -72,8 +71,6 @@ class Round13Spec extends AnyFunSuite {
 
   test("asof_join TVF: direction argument reaches the operator") {
     import spark.implicits._
-    org.apache.spark.sql.GraftBridge.applyExtensions(spark,
-      new graft.plans.GraftExtensions()(_))
     val ev = graft.sources.Tables.events(spark, sf)
     ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts", $"value")
@@ -223,8 +220,6 @@ class Round13Spec extends AnyFunSuite {
   test("IntervalJoinRule: naive overlap join plans bucketed, result-identical") {
     import org.apache.spark.sql.execution.SparkPlan
     val s2 = spark.newSession() // isolate the width conf
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s2,
-      graft.plans.IntervalJoinRule)
     def frames(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
       // crafted intervals incl. an INVERTED row (t0 > t1 — the min/max

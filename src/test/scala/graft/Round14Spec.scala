@@ -56,8 +56,6 @@ class Round14Spec extends AnyFunSuite {
 
   test("preserved-side interval rewrite ≡ naive for all four types") {
     val s2 = spark.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s2,
-      graft.plans.IntervalJoinRule)
     s2.conf.set(graft.plans.IntervalJoinRule.WidthConf, "50")
     // maxSpan honored by every fixture row (largest span = a5's 5000)
     s2.conf.set(graft.plans.IntervalJoinRule.MaxSpanConf, "5000")
@@ -95,8 +93,6 @@ class Round14Spec extends AnyFunSuite {
     // sign-safe floor-div buckets and negative-bucket sequences
     // through every join type with endpoints straddling zero
     val s2 = spark.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s2,
-      graft.plans.IntervalJoinRule)
     s2.conf.set(graft.plans.IntervalJoinRule.WidthConf, "37")
     s2.conf.set(graft.plans.IntervalJoinRule.MaxSpanConf, "2000")
     val rnd = new scala.util.Random(42)
@@ -123,8 +119,6 @@ class Round14Spec extends AnyFunSuite {
 
   test("interval maxSpan contract violation raises a descriptive error") {
     val s2 = spark.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s2,
-      graft.plans.IntervalJoinRule)
     s2.conf.set(graft.plans.IntervalJoinRule.WidthConf, "50")
     s2.conf.set(graft.plans.IntervalJoinRule.MaxSpanConf, "150")
     val (a, b) = fixture(s2)
@@ -271,7 +265,6 @@ class Round14Spec extends AnyFunSuite {
   }
 
   test("q369 profiler: margin/volume arithmetic pins on a hand grid") {
-    import spark.implicits._
     val rows = TimeQueries.queries("q369_interval_profile")(spark, sf)
       .collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 3L, 6L, 12L, 24L))

@@ -55,8 +55,6 @@ class Round15Spec extends AnyFunSuite {
 
   private def ivSession(width: String, maxSpan: String): SparkSession = {
     val s2 = spark.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s2,
-      graft.plans.IntervalJoinRule)
     s2.conf.set(graft.plans.IntervalJoinRule.WidthConf, width)
     s2.conf.set(graft.plans.IntervalJoinRule.MaxSpanConf, maxSpan)
     s2

@@ -49,7 +49,6 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("streaming sweep twin ≡ batch q376 across a 3-batch split") {
-    import spark.implicits._
     import graft.streaming.StreamingSweep
     implicit val enc = org.apache.spark.sql.Encoders
       .product[StreamingSweep.DayAgg]
@@ -65,7 +64,6 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("streaming coverage twin ≡ batch q382 across a 3-batch split") {
-    import spark.implicits._
     import graft.streaming.StreamingSweep
     implicit val enc = org.apache.spark.sql.Encoders
       .product[StreamingSweep.DayCov]

@@ -199,7 +199,6 @@ class ScoringSpec extends AnyFunSuite {
   }
 
   test("unigram nll: rare-token docs score higher than common-token docs") {
-    import spark.implicits._
     val got = ScoringQueries.qUnigramNll(spark, sf)
     val n = got.count()
     assert(n > 0)

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.{IdempotentSink, RecordSchemas}
 import graft.pipelines.TwitterPipeline
@@ -126,7 +125,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ingestion-log metrics: all three flows expose observed counts") {
-    import spark.implicits._
     @volatile var seen = Map.empty[String, Long]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -160,11 +158,6 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("SparkSessionExtensions: injected functions resolve in SQL") {
-    // getOrCreate reuses the shared test session and ignores
-    // withExtensions, so apply the extensions object to it directly —
-    // same injection path a fresh `.withExtensions(...)` build runs.
-    org.apache.spark.sql.GraftBridge.applyExtensions(
-      spark, new graft.plans.GraftExtensions)
     val r = spark.sql(
       "SELECT dot_product(array(1.0d,2.0d), array(3.0d,4.0d)) AS d").head()
     assert(r.getDouble(0) == 11.0)

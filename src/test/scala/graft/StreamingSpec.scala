@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import graft.streaming.StreamPipelines
 
 case class InTweet(tweet_id: String, text: String, created_at: String)

@@ -6,20 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextOps
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
-    org.apache.spark.sql.GraftBridge.installStrategy(s,
-      graft.plans.AsOfJoinStrategy)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(s,
-      graft.plans.BandJoinRule)
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 class TextOpsSpec extends AnyFunSuite {

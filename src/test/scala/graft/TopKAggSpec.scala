@@ -38,7 +38,6 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("aggregate plans as ObjectHashAggregate with a partial stage") {
-    import spark.implicits._
     val df = SimilarityQueries.qTopkAggregate(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString

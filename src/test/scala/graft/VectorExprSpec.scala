@@ -153,7 +153,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("SQL registration: dot_product / l2_norm callable from spark.sql") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
       "l2_norm(array(3.0d, 4.0d)) AS n").head()
@@ -182,14 +181,12 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("null inputs propagate null") {
-    import spark.implicits._
     val r = spark.sql(
       "SELECT dot_product(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d))").head()
     assert(r.isNullAt(0))
   }
 
   test("length mismatch: native folds the shorter prefix; HOF form null-pads") {
-    VectorExpressions.register(spark)
     // documented divergence: interchangeable only on equal-length vectors
     val r = spark.sql(
       "SELECT dot_product(array(1.0d, 2.0d, 9.0d), array(3.0d, 4.0d)) AS d, " +

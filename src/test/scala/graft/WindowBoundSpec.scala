@@ -13,8 +13,9 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
   * floor under which a REAL single-partition regression would hide.
   *
   * This spec converts the convention into a checked contract: it
-  * optimizes every registered query at sf0.001 (under the same
-  * optimizer rules Verify installs, on a child session), collects the
+  * optimizes every registered query at sf0.001 (on a child session of
+  * the shared one, so under the GraftExtensions rules every main
+  * plans with), collects the
   * queries whose optimized plan retains a Window with an empty
   * partition spec, and requires the set to EQUAL the enumerated
   * allowlist below — each entry carrying the reason its frame is
@@ -41,14 +42,6 @@ class WindowBoundSpec extends AnyFunSuite {
 
   test("unpartitioned Window sites equal the enumerated bounded set") {
     val spark = TestSpark.spark.newSession()
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.TopKWindowRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.BandJoinRule)
-    org.apache.spark.sql.GraftBridge.installOptimizerRule(spark,
-      graft.plans.IntervalJoinRule)
-    org.apache.spark.sql.GraftBridge.installStrategy(spark,
-      graft.plans.AsOfJoinStrategy)
     val offenders = scala.collection.mutable.SortedMap[String, Int]()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {
