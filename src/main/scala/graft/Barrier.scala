@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage-truncation barrier for driver-side iterative loops (CC
   * label-prop, PageRank/PPR/HITS, suffix-array doubling, GD trainers,
@@ -22,8 +22,8 @@ import org.apache.spark.sql.DataFrame
   *    executor-local blocks are gone with the executor (Spark docs,
   *    RDD.localCheckpoint).
   *
-  * Both forms are EAGER by default (the loop's round must materialize
-  * before the next round builds on it) and both bottom out in a
+  * Both forms are EAGER (the loop's round must materialize before the
+  * next round builds on it) and both bottom out in a
   * LogicalRDD leaf, so the Round10Spec structural guard holds under
   * either setting.
   */
@@ -37,6 +37,11 @@ object Barrier {
     * The prefixed form wins if both are set. */
   val DirConf = "graft.checkpoint.dir"
   val DirConfSpark = "spark.graft.checkpoint.dir"
+
+  /** The durable checkpoint directory `s` is configured with, if any. */
+  def checkpointDir(s: SparkSession): Option[String] =
+    s.conf.getOption(DirConfSpark).orElse(s.conf.getOption(DirConf))
+      .map(_.trim).filter(_.nonEmpty)
 
   // remember which conf value we last applied per SparkContext, so the
   // UUID-subdir-creating setCheckpointDir only runs when the knob
@@ -68,19 +73,14 @@ object Barrier {
     /** Eager barrier — the form every round of an iterative core ends
       * in. Reliable when `[spark.]graft.checkpoint.dir` is set, local
       * else. */
-    def roundBarrier(): DataFrame = roundBarrier(eager = true)
-
-    def roundBarrier(eager: Boolean): DataFrame = {
+    def roundBarrier(): DataFrame = {
       val s = df.sparkSession
-      val dir = s.conf.getOption(Barrier.DirConfSpark)
-        .orElse(s.conf.getOption(Barrier.DirConf))
-        .map(_.trim).filter(_.nonEmpty)
-      dir match {
+      checkpointDir(s) match {
         case Some(d) =>
           ensureDir(s.sparkContext, d)
-          df.checkpoint(eager)
+          df.checkpoint()
         case None =>
-          df.localCheckpoint(eager)
+          df.localCheckpoint()
       }
     }
   }

@@ -679,25 +679,6 @@ object DedupQueries extends QueryModule {
       .select(col("doc_id"), shingles(col("toks")).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** One persisted signature frame per (session, dir): the persist is
-    * load-bearing (see qMinhashLsh) but repeated invocations in one
-    * long-lived session must reuse it, not pin a fresh copy each time.
-    * Keyed on the stable sessionUUID (not identityHashCode — that can
-    * collide after a GC). Eviction (round-2 ADVICE): only entries whose
-    * owning session is GONE — context stopped or session collected — are
-    * unpersisted; two LIVE sessions in one JVM (the newSession() test
-    * pattern) each keep their own entry instead of thrashing each
-    * other's load-bearing persist on every access. Results go stale if
-    * the parquet under `dir` is rewritten mid-session — acceptable for
-    * immutable test data. */
-  // Staged-frame caches (SessionCache: one persisted frame per
-  // session+dir with dead-session eviction — see Staging.scala).
-  // Clusters, reports, matrices, and applies are all derived reads of
-  // these staged tables, not recomputations.
-  private val sigCache = new SessionCache
-  private val pairCache = new SessionCache
-  private val shingleCache = new SessionCache
-
   /** Staged (doc_id, fp, sh) frame — the normalized-token fingerprint +
     * word-trigram shingle set every dedup/contamination query consumes.
     * The cleanText regex chain + tokenize + stopword filter + shingle
@@ -706,37 +687,33 @@ object DedupQueries extends QueryModule {
     * everywhere" discipline a 100 TB pipeline applies by materializing
     * the token table next to the corpus. */
   private def docShingles(s: SparkSession, dir: String): DataFrame =
-    // Double-staged (round-16 optimization): the cleanText + tokenize
-    // + shingle chain is the dominant map cost of every consumer and
-    // was re-paid once per session per family pass; the durable stage
-    // makes a fresh session's first consumer a columnar read. Bump
-    // the version on any change to normTokens/shingles/fp.
-    shingleCache.get(s, dir)(
-      DurableStage.get(s, "doc_shingles", 1,
-        Seq(s"$dir/documents.parquet"),
-        salt = "trigram;md5fp") {
-        Tables.documents(s, dir)
-          .select(col("doc_id"), normTokens(col("text")).as("toks"))
-          .select(col("doc_id"),
-            md5(array_join(col("toks"), " ")).as("fp"),
-            shingles(col("toks")).as("sh"))
-          .filter(size(col("sh")) > 0)
-      })
+    // Durable (round-16 optimization): the cleanText + tokenize +
+    // shingle chain is the dominant map cost of every consumer; a fresh
+    // session's first consumer reads it as columns. Bump the version on
+    // any change to normTokens/shingles/fp.
+    DurableStage.get(s, "doc_shingles", 1,
+      Seq(s"$dir/documents.parquet"),
+      salt = "trigram;md5fp") {
+      Tables.documents(s, dir)
+        .select(col("doc_id"), normTokens(col("text")).as("toks"))
+        .select(col("doc_id"),
+          md5(array_join(col("toks"), " ")).as("fp"),
+          shingles(col("toks")).as("sh"))
+        .filter(size(col("sh")) > 0)
+    }
 
   private def cachedSignatures(s: SparkSession, dir: String): DataFrame =
-    // Double-staged (round-16 optimization, same rationale as
-    // docShingles): the shingle explode + 32-way min aggregation is
-    // the signature build's whole cost; a fresh session now reads the
-    // staged (doc_id, sig) table instead.
-    sigCache.get(s, dir)(
-      DurableStage.get(s, "minhash_sigs", 1,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"k=$MinhashK;xxh-seeded") {
-        signatures(s, dir)
-          .withColumn("sig",
-            array((0 until MinhashK).map(i => col(s"h$i")): _*))
-          .select(col("doc_id"), col("sig"))
-      })
+    // Durable (round-16 optimization, same rationale as docShingles):
+    // the shingle explode + 32-way min aggregation is the signature
+    // build's whole cost.
+    DurableStage.get(s, "minhash_sigs", 1,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"k=$MinhashK;xxh-seeded") {
+      signatures(s, dir)
+        .withColumn("sig",
+          array((0 until MinhashK).map(i => col(s"h$i")): _*))
+        .select(col("doc_id"), col("sig"))
+    }
 
   /** MinHash-LSH near-dup: band-bucket candidate generation, then the
     * classic LSH verify step — candidates re-checked with the EXACT
@@ -757,23 +734,20 @@ object DedupQueries extends QueryModule {
 
   /** The staged verified-pairs table (x_id, y_id, jaccard): q32 emits
     * it, and q64/q68/q94/q109/q136/q171/q185/q186 are derived reads —
-    * recomputing LSH per consumer measured ~3s each at sf0.1. Two
-    * staging layers (round-15 verdict #1): the in-memory SessionCache
-    * bounds the common case, and a run-DURABLE parquet stage
-    * (DurableStage — checkpoint-dir rooted) bounds the WORST case:
-    * after the first build anywhere, any recompute — cache eviction,
-    * host stall, family reorder, a fresh session or JVM — degrades to
-    * a columnar read instead of re-paying the 10-20 s
-    * MinHash+banding+verify chain (the q186 exposure that shipped
-    * three rounds running). The stage signature carries the LSH
-    * config; bump the version on any logic change to
-    * buildVerifiedPairs or its upstream shingle/signature steps. */
+    * recomputing LSH per consumer measured ~3s each at sf0.1. A
+    * run-DURABLE parquet stage (round-15 verdict #1): after the first
+    * build anywhere, any recompute — cache eviction, host stall,
+    * family reorder, a fresh session or JVM — degrades to a columnar
+    * read instead of re-paying the 10-20 s MinHash+banding+verify
+    * chain (the q186 exposure that shipped three rounds running). The
+    * stage signature carries the LSH config; bump the version on any
+    * logic change to buildVerifiedPairs or its upstream
+    * shingle/signature steps. */
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.get(s, dir)(
-      DurableStage.get(s, "verified_pairs", 1,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"k=$MinhashK;b=$BandRows;tau=$VerifyTau")(
-        buildVerifiedPairs(s, dir)))
+    DurableStage.get(s, "verified_pairs", 1,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"k=$MinhashK;b=$BandRows;tau=$VerifyTau")(
+      buildVerifiedPairs(s, dir))
 
   /** The staged verified near-dup pair frame, exposed for the
     * cross-family agreement audit (q387 in SimilarityQueries). */
@@ -897,19 +871,17 @@ object DedupQueries extends QueryModule {
     * q68's report and q109's apply are derived reads. The CC loop is
     * already eager (localCheckpoint per round), so the persist here
     * costs one cache write of a labels-sized frame. */
-  private val labelCache = new SessionCache
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    // Double-staged (round-16 optimization): the CC convergence loop
+    // Durable (round-16 optimization): the CC convergence loop
     // (barrier + changed-count job per round) re-ran per fresh
     // session; after the first build anywhere it is a columnar read.
     // Bump the version on any change to buildClusterLabels; the salt
     // carries the upstream LSH config (the labels derive from
     // verified_pairs).
-    labelCache.get(s, dir)(
-      DurableStage.get(s, "cluster_labels", 1,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"k=$MinhashK;b=$BandRows;tau=$VerifyTau;minlabel-cc")(
-        buildClusterLabels(s, dir)))
+    DurableStage.get(s, "cluster_labels", 1,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"k=$MinhashK;b=$BandRows;tau=$VerifyTau;minlabel-cc")(
+      buildClusterLabels(s, dir))
 
   private def buildClusterLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1557,19 +1529,17 @@ object DedupQueries extends QueryModule {
 
   /** The verified ≥ 0.8 pair frame behind q199 (and q201/q203's
     * near-dup label): (doc_a, doc_b, i, na, nb) with 5·i ≥ 4·(na+nb−i).
-    * Double-staged (round-16 optimization): q199 emits it and the eval
+    * Durable (round-16 optimization): q199 emits it and the eval
     * family reads it, but the prefix-filter build measured ~3.9 s of
     * q199's 4.22 s cold at sf0.1, re-paid per fresh session; the
     * durable stage turns that into a columnar read. Bump the version
     * on any change to buildPrefixPairs; the threshold is in the salt. */
-  private val prefixPairCache = new SessionCache
   private[operators] def prefixPairs(s: SparkSession, dir: String)
       : DataFrame =
-    prefixPairCache.get(s, dir)(
-      DurableStage.get(s, "prefix_pairs", 2,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"tau=$PrefixTauNum/$PrefixTauDen;prefix-filter")(
-        buildPrefixPairs(s, dir)))
+    DurableStage.get(s, "prefix_pairs", 2,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"tau=$PrefixTauNum/$PrefixTauDen;prefix-filter")(
+      buildPrefixPairs(s, dir))
 
   /** q199's Jaccard threshold τ = PrefixTauNum / PrefixTauDen, kept as
     * two integers so every threshold test stays exact integer math. */
@@ -1585,7 +1555,7 @@ object DedupQueries extends QueryModule {
     val sets = Tables.documents(s, dir)
       .select($"doc_id", shingles(TextOps.tokenize($"text")).as("sh"))
       .filter(size($"sh") > 0)
-      .roundBarrier(true)
+      .roundBarrier()
     val df = sets.select($"doc_id", explode($"sh").as("term"))
       .groupBy($"term").agg(count(lit(1)).as("df"))
     // shingle-df join left UNHINTED (q172's discipline): the df frame
@@ -1599,7 +1569,7 @@ object DedupQueries extends QueryModule {
       .select($"doc_id",
         transform($"st", x => x.getField("term")).as("toks"),
         size($"st").as("n"))
-      .roundBarrier(true)
+      .roundBarrier()
     // Candidate generation moves IDs AND SIZES ONLY (guide §8 / §2.3:
     // decide with small rows, move big rows once): round-16's spelling
     // carried each doc's full sorted shingle array through the prefix
@@ -1733,20 +1703,17 @@ object DedupQueries extends QueryModule {
 
   /** The rank frame behind q285, unsorted — shared with q287, which
     * consumes rank EQUALITY (not order) and must not inherit a global
-    * sort it would immediately throw away. Double-staged (round-16
-    * optimization, the verified_pairs discipline): SessionCache bounds
-    * the common case; the run-durable parquet stage bounds the worst —
-    * the 4-round doubling build measured ~6.9 s of q285's 7.15 s cold
-    * at sf0.1, re-paid by every fresh session/JVM; after the first
-    * build anywhere it degrades to a columnar read. Bump the version
-    * on any change to buildSuffixRanks, SaContext, or SaBuckets. */
-  private val suffixCache = new SessionCache
+    * sort it would immediately throw away. Durable (round-16
+    * optimization, the verified_pairs discipline): the 4-round doubling
+    * build measured ~6.9 s of q285's 7.15 s cold at sf0.1, re-paid by
+    * every fresh session/JVM; after the first build anywhere it
+    * degrades to a columnar read. Bump the version on any change to
+    * buildSuffixRanks, SaContext, or SaBuckets. */
   private def suffixRanks(s: SparkSession, dir: String): DataFrame =
-    suffixCache.get(s, dir)(
-      DurableStage.get(s, "suffix_ranks", 3,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"ctx=$SaContext;bkts=$SaBuckets;seed=$SaSeed")(
-        buildSuffixRanks(s, dir)))
+    DurableStage.get(s, "suffix_ranks", 3,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"ctx=$SaContext;bkts=$SaBuckets;seed=$SaSeed")(
+      buildSuffixRanks(s, dir))
 
   /** The actual doubling build. Lineage discipline (round-9 fix): each
     * doubling round ends in an EAGER localCheckpoint, and the
@@ -1861,7 +1828,7 @@ object DedupQueries extends QueryModule {
     * round-9 doc_id·10⁶+pos composite corrupted keeper choice for
     * any document past 10⁶ tokens).
     *
-    * The suffix-rank frame arrives staged (suffixCache) and `full`
+    * The suffix-rank frame arrives staged (suffix_ranks) and `full`
     * is localCheckpointed before its two consumers (the dup groupBy
     * and the marked join) read it — one rank scan, not two.
     *

@@ -45,20 +45,6 @@ object GraphQueries extends QueryModule {
     * round. GraphSpec pins lazy ≡ checkpointed on the shipped graph. */
   private val CheckpointAbove = 3
 
-  /** One staged WEIGHTED transition-edge frame per (session, dir).
-    * Round-16 staged the raw (src, dst) multigraph here — one row per
-    * transition, the corpus-scale frame — and its MEMORY_AND_DISK
-    * residency under the family's other staged frames is what thrashed
-    * q92's iteration loop (round-16 verdict #3: 15 s cold / 34.6 s warm
-    * with a warm>cold inversion). Round-17 observation: NO consumer
-    * ever reads the raw frame except through an aggregate — every
-    * query starts from either the directed (src, dst, count) frame or
-    * its undirected rollup — so the session stage is now the weighted
-    * frame (bounded by |distinct item pairs|, orders of magnitude
-    * smaller than the transition stream) and the raw window derivation
-    * runs exactly once per session to build it. */
-  private val edgeCache = new SessionCache
-
   /** (src, dst) raw transition edges (one row per transition) — the
     * events scan + per-user lag window. NOT cached: consumed once per
     * session by [[weightedEdges]]. */
@@ -75,15 +61,24 @@ object GraphQueries extends QueryModule {
   }
 
   /** (src, dst, c) directed transition counts — the multigraph rolled
-    * up to one row per ordered pair, staged per (session, dir). */
+    * up to one row per ordered pair, staged per (session, dir).
+    * Round-16 staged the raw (src, dst) multigraph here — one row per
+    * transition, the corpus-scale frame — and its MEMORY_AND_DISK
+    * residency under the family's other staged frames is what thrashed
+    * q92's iteration loop (round-16 verdict #3: 15 s cold / 34.6 s warm
+    * with a warm>cold inversion). Round-17 observation: NO consumer
+    * ever reads the raw frame except through an aggregate — every
+    * query starts from either the directed (src, dst, count) frame or
+    * its undirected rollup — so the session stage is now the weighted
+    * frame (bounded by |distinct item pairs|, orders of magnitude
+    * smaller than the transition stream) and the raw window derivation
+    * runs exactly once per session to build it. */
   private def weightedEdges(s: SparkSession, dir: String): DataFrame =
-    edgeCache.get(s, dir) {
+    SessionCache.get(s, "weighted_edges", dir) {
       import s.implicits._
       rawEdges(s, dir).groupBy($"src", $"dst")
         .agg(count(lit(1)).as("c"))
     }
-
-  private val undCache = new SessionCache
 
   /** (a, b, c) canonical undirected pair counts (a < b, c sums both
     * directions) — staged per (session, dir): eight graph queries each
@@ -93,7 +88,7 @@ object GraphQueries extends QueryModule {
     * per-consumer filters replaces eight corpus-scale groupBy
     * shuffles per session (guide §2.4). */
   private def undWeighted(s: SparkSession, dir: String): DataFrame =
-    undCache.get(s, dir) {
+    SessionCache.get(s, "undirected_edges", dir) {
       import s.implicits._
       weightedEdges(s, dir)
         .groupBy(least($"src", $"dst").as("a"),
@@ -207,7 +202,7 @@ object GraphQueries extends QueryModule {
       .select($"e.a".as("u"), $"e.b".as("v"), $"e.da".as("du"), $"e.db".as("dv"))
       // barriered once (round-17): three consumers (both wedge sides +
       // the closure probe) each re-ran the two degree joins otherwise
-      .roundBarrier(true)
+      .roundBarrier()
     // wedges at the lower endpoint u: pick the (v, w) pair ordered by the
     // same (deg, id) key so the closing edge is probed in ITS canonical
     // orientation
@@ -261,22 +256,20 @@ object GraphQueries extends QueryModule {
   }
 
   /** The (node, comp) label frame of q158's support-filtered graph,
-    * double-staged (round-16 optimization, the verified_pairs
+    * a durable stage (round-16 optimization, the verified_pairs
     * discipline): q158 emits it and q175's histogram is a derived
     * read — each used to re-run the full star-contraction convergence
     * loop (~3 barriered rounds + fixpoint checks) independently, and
     * any fresh session re-paid it again. Bump the version on any
     * change to starComponents, the edge derivation, or MinEdgeWeight. */
-  private val ccCache = new SessionCache
   private def ccLabels(s: SparkSession, dir: String): DataFrame =
-    ccCache.get(s, dir)(
-      DurableStage.get(s, "cc_labels", 2,
-        Seq(s"$dir/events.parquet"),
-        salt = s"minw=$MinEdgeWeight;star-contraction") {
-        import s.implicits._
-        starComponents(undWeighted(s, dir)
-          .filter($"c" >= MinEdgeWeight).select($"a", $"b"))
-      })
+    DurableStage.get(s, "cc_labels", 2,
+      Seq(s"$dir/events.parquet"),
+      salt = s"minw=$MinEdgeWeight;star-contraction") {
+      import s.implicits._
+      starComponents(undWeighted(s, dir)
+        .filter($"c" >= MinEdgeWeight).select($"a", $"b"))
+    }
 
   /** Star-contraction CC over canonical undirected edges (a < b,
     * distinct). Split out so GraphSpec can pin multi-component fixtures. */
@@ -502,20 +495,18 @@ object GraphQueries extends QueryModule {
   }
 
   /** The (node, lab) LPA label frame of the support-filtered graph,
-    * double-staged (round-16 optimization): q219 emits it and q353's
+    * a durable stage (round-16 optimization): q219 emits it and q353's
     * modularity audit is a derived read — each used to re-run the
     * full 4-round LPA loop independently. Bump the version on any
     * change to lpaCore, the edge derivation, LpaSupport, or LpaIters. */
-  private val lpaCache = new SessionCache
   private def lpaStaged(s: SparkSession, dir: String): DataFrame =
-    lpaCache.get(s, dir)(
-      DurableStage.get(s, "lpa_labels", 2,
-        Seq(s"$dir/events.parquet"),
-        salt = s"sup=$LpaSupport;iters=$LpaIters") {
-        import s.implicits._
-        lpaCore(undWeighted(s, dir)
-          .filter($"c" >= LpaSupport).select($"a", $"b"))
-      })
+    DurableStage.get(s, "lpa_labels", 2,
+      Seq(s"$dir/events.parquet"),
+      salt = s"sup=$LpaSupport;iters=$LpaIters") {
+      import s.implicits._
+      lpaCore(undWeighted(s, dir)
+        .filter($"c" >= LpaSupport).select($"a", $"b"))
+    }
 
   /** LPA core over canonical (a < b) undirected edges; split out so
     * GraphSpec can pin community splits on crafted fixtures. Returns
@@ -878,7 +869,7 @@ object GraphQueries extends QueryModule {
     val seeds = we.groupBy($"dst".as("node"))
       .agg(sum($"w").cast("long").as("ind"))
       .orderBy($"ind".desc, $"node".asc).limit(PprSeeds)
-      .select($"node").roundBarrier(true)
+      .select($"node").roundBarrier()
     // 1/|seeds|, not 1/PprSeeds: a tiny graph can have fewer than
     // PprSeeds in-degree-positive nodes, and the teleport vector must
     // still sum to 1 or rank mass leaks every iteration
@@ -888,7 +879,7 @@ object GraphQueries extends QueryModule {
       .select($"node",
         when($"is_seed" === 1, lit(1.0 / nSeeds)).otherwise(lit(0.0))
           .as("t"))
-      .roundBarrier(true)
+      .roundBarrier()
     var ranks = tele.select($"node", $"t".as("rank"))
     for (_ <- 1 to PprIters) {
       val contrib = ranks

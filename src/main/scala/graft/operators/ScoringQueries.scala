@@ -197,9 +197,8 @@ object ScoringQueries extends QueryModule {
     * unkFold ∘ posexplode, just not exploded yet. Session-staged
     * (round 17): q93 and q160 consume the identical frame — the
     * second reads instead of re-running the vocab pass + fold. */
-  private val foldedCache = new SessionCache
   private def foldedTokenArrays(s: SparkSession, dir: String): DataFrame =
-    foldedCache.get(s, dir)(buildFoldedTokenArrays(s, dir))
+    SessionCache.get(s, "folded_tokens", dir)(buildFoldedTokenArrays(s, dir))
 
   private def buildFoldedTokenArrays(s: SparkSession, dir: String)
       : DataFrame = {
@@ -480,12 +479,11 @@ object ScoringQueries extends QueryModule {
   /** The (source, quartile) cell frame shared by q380 and q391:
     * folded token pass → per-doc quantized NLL → per-source ntile(4)
     * → cell aggregates with the decimal-widened quantized mass. */
-  private val cellCache = new SessionCache
   private def quartileCells(s: SparkSession, dir: String): DataFrame =
     // staged (round 17): q380 and q391 each re-ran the token pass +
     // per-source ntile; the cell frame is |sources|·4 rows — the
     // second consumer reads it for free (guide §2.4/§5)
-    cellCache.get(s, dir)(buildQuartileCells(s, dir))
+    SessionCache.get(s, "quartile_cells", dir)(buildQuartileCells(s, dir))
 
   private def buildQuartileCells(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1130,25 +1128,25 @@ object ScoringQueries extends QueryModule {
     * selection is a derived read (recomputing the gram chain per
     * consumer measured ~3s at sf0.1; a real DSIR run materializes the
     * weights next to the corpus exactly once). */
-  /** DSIR bucket count — module-level so the stage salt interpolates
-    * the SAME constant the build uses (round-16 ADVICE: a hardcoded
-    * salt string detached from the code constant silently serves a
-    * stale cross-JVM stage when the constant moves). */
+  /** DSIR bucket count, additive smoothing and target language —
+    * module-level so the stage salt interpolates the SAME constants the
+    * build uses (round-16 ADVICE: a hardcoded salt string detached from
+    * the code constant silently serves a stale cross-JVM stage when the
+    * constant moves). */
   private val DsirB = 1024
+  private val DsirSmooth = 0.5
+  private val DsirTarget = "en"
 
-  private val weightCache = new SessionCache
   private def dsirWeightFrame(s: SparkSession, dir: String): DataFrame =
-    // Double-staged (round-16 optimization, the verified_pairs
-    // discipline): the gram-explode + double-histogram build measured
-    // ~4.0 s of q104's 4.34 s cold at sf0.1, re-paid by every fresh
-    // session; the run-durable parquet stage turns that into a
-    // columnar read. Bump the version on any change to
-    // buildDsirWeights (B, smoothing, hash prefix).
-    weightCache.get(s, dir)(
-      DurableStage.get(s, "dsir_weights", 1,
-        Seq(s"$dir/documents.parquet"),
-        salt = s"B=$DsirB;smooth=0.5;tgt=en")(
-        buildDsirWeights(s, dir)))
+    // Durable (round-16 optimization, the verified_pairs discipline):
+    // the gram-explode + double-histogram build measured ~4.0 s of
+    // q104's 4.34 s cold at sf0.1, re-paid by every fresh session; the
+    // run-durable parquet stage turns that into a columnar read. Bump
+    // the version on any change to buildDsirWeights' hash prefix.
+    DurableStage.get(s, "dsir_weights", 1,
+      Seq(s"$dir/documents.parquet"),
+      salt = s"B=$DsirB;smooth=$DsirSmooth;tgt=$DsirTarget")(
+      buildDsirWeights(s, dir))
 
   private def buildDsirWeights(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1168,22 +1166,22 @@ object ScoringQueries extends QueryModule {
       .select($"doc_id", $"lang",
         pmod(conv(substring(md5(concat(lit("dsir:"), $"g")), 1, 6),
           16, 10).cast("long"), lit(B)).as("b"))
-      .roundBarrier(true)
+      .roundBarrier()
     // BOTH histograms in one conditional aggregation: one scan of the
     // gram stream and one 1024-bucket shuffle fit raw and target
     // distributions together (a second scan per distribution is the
     // naive shape; at 100 TB it doubles the dominant cost for nothing)
     val dist = grams.groupBy($"b").agg(
       count(lit(1)).as("c_raw"),
-      sum(when($"lang" === "en", 1L).otherwise(0L)).as("c_tgt"))
+      sum(when($"lang" === DsirTarget, 1L).otherwise(0L)).as("c_tgt"))
     val tot = dist.agg(sum($"c_raw").as("n_raw"),
       sum($"c_tgt").as("n_tgt"))
     val ratio = dist.crossJoin(broadcast(tot))
       .select($"b",
-        (log(($"c_tgt" + lit(0.5)) /
-             ($"n_tgt" + lit(0.5 * B))) -
-         log(($"c_raw" + lit(0.5)) /
-             ($"n_raw" + lit(0.5 * B)))).as("llr"))
+        (log(($"c_tgt" + lit(DsirSmooth)) /
+             ($"n_tgt" + lit(DsirSmooth * B))) -
+         log(($"c_raw" + lit(DsirSmooth)) /
+             ($"n_raw" + lit(DsirSmooth * B)))).as("llr"))
     grams.join(broadcast(ratio), "b")
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_grams"),
@@ -2298,7 +2296,7 @@ object ScoringQueries extends QueryModule {
     var cells = base.groupBy($"x", $"y").agg(count(lit(1)).as("c"))
       .withColumn("w", lit(1000000L))
       .withColumn("vote", lit(0L))
-      .roundBarrier(true)
+      .roundBarrier()
     val out = Seq.newBuilder[(Int, Long, Int, Double, Double, Double)]
     for (r <- 1 to AdaRounds) {
       val px = cells.groupBy($"x")
@@ -2335,7 +2333,7 @@ object ScoringQueries extends QueryModule {
           when(h =!= $"y", floor($"w" * lit(m)))
             .otherwise(floor($"w" * lit(1.0 / m))).cast("long"))
         .withColumn("vote", $"vote" + lit(aq) * h)
-        .roundBarrier(true)
+        .roundBarrier()
       val accRow = cells.agg(
         sum(when((when($"vote" >= 0L, 1L).otherwise(-1L)) === $"y", $"c")
           .otherwise(0L)).as("ok"),
@@ -2424,7 +2422,7 @@ object ScoringQueries extends QueryModule {
     def marginsOf(wf: DataFrame): DataFrame =
       feats.join(broadcast(wf), Seq("f"))
         .groupBy($"doc_id").agg(sum($"w_nano").as("u_nano"))
-        .roundBarrier(true)
+        .roundBarrier()
     var uDoc = s.createDataFrame(Seq.empty[(Long, Long)])
       .toDF("doc_id", "u_nano")
     val out = Seq.newBuilder[(Int, Double, Double, Long, Double)]
@@ -2435,7 +2433,7 @@ object ScoringQueries extends QueryModule {
       val dm = scored.select($"doc_id", $"y", $"u",
         floor(lit(1e6) * ($"y" - (lit(0.5) + $"u"
           / (lit(2.0) * (lit(1.0) + abs($"u"))))) + 0.5).cast("long")
-          .as("d_micro")).roundBarrier(true)
+          .as("d_micro")).roundBarrier()
       // gradient: one feature-keyed exact-integer aggregate
       val gF = feats.join(dm.select($"doc_id", $"d_micro"), Seq("doc_id"))
         .groupBy($"f").agg(sum($"d_micro").as("g_micro"))
@@ -2449,7 +2447,7 @@ object ScoringQueries extends QueryModule {
             floor(step * coalesce($"g_micro", lit(0L)) / n).cast("long"))
             .as("w_nano"))
         .filter($"w_nano" =!= 0L)
-        .roundBarrier(true)
+        .roundBarrier()
       bNano += math.floor(1e3 * SlrLr * gB / n).toLong
       // round metrics: prediction at the UPDATED weights — the same
       // margin frame the next round's gradient consumes. Both metric
@@ -2687,11 +2685,10 @@ object ScoringQueries extends QueryModule {
     * once and the other three queries become single-pass reads. The
     * per-round 1-row frames the consumers crossJoin are filters of the
     * staged 8-row frame — identical snap9-quantized values. */
-  private val lrTrajCache = new SessionCache
   private def stagedLrTrajectory(s: SparkSession, dir: String)
       : Seq[DataFrame] = {
     import s.implicits._
-    val all = lrTrajCache.get(s, dir) {
+    val all = SessionCache.get(s, "lr_trajectory", dir) {
       lrWeights(corpusLrBase(s, dir).roundBarrier()).zipWithIndex
         .map { case (w, i) =>
           val r = i + 1

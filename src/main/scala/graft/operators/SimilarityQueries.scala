@@ -56,12 +56,17 @@ object SimilarityQueries extends QueryModule {
     * brute-force at scale (the sub-linear path is q41/q42). */
   private val QueryChunkRows = 100000
 
+  /** Neighbors per query in the exhaustive truth set, and the id
+    * modulus that picks the query vectors (every 100th). */
+  private val TruthK = 5
+  private val QueryMod = 100
+
   /** All (query, corpus) cosine pairs, chunk-bounded broadcasts. */
   private def scoredPairs(s: SparkSession, dir: String,
       chunkRows: Int): DataFrame = {
     import s.implicits._
     val all = vecs(s, dir)
-    val q = all.filter($"vec_id" % 100 === 0)
+    val q = all.filter($"vec_id" % QueryMod === 0)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
     val nChunks = math.max(1L,
       (q.count() + chunkRows - 1) / chunkRows).toInt
@@ -81,33 +86,27 @@ object SimilarityQueries extends QueryModule {
   def qCosineTopk(s: SparkSession, dir: String): DataFrame =
     cosineTopkWith(s, dir, QueryChunkRows)
 
-  private val truthCache = new SessionCache
-
-  /** The exhaustive top-5 truth set (q_id, vec_id), staged once per
-    * session (round 15): five recall harnesses (q128/q256/q265/q373/
-    * q383) each paid the n²/100 brute pass independently — the same
-    * truth every time (q40's exact tie rule). Staging it is the
-    * "materialize the eval truth next to the index" amortization a
-    * real offline-recall pipeline applies; q40/q43 keep their own
-    * plans because the scan IS the operator under test there. */
-  private def truthTop5(s: SparkSession, dir: String): DataFrame =
-    truthCache.get(s, dir) {
-      import s.implicits._
-      // Double-staged (round-16 verdict #2, the verified-pairs
-      // discipline): the n²/100 brute pass is also run-DURABLE, so a
-      // fresh session/JVM (the bench's per-family cold start, the
-      // driver's separate Verify and Bench JVMs) re-pays a columnar
-      // read, not the full exhaustive scan. Bump the version on any
-      // change to scoredPairs or the tie rule.
-      DurableStage.get(s, "ann_truth5", 1,
-        Seq(s"$dir/embeddings.parquet"), salt = "k=5;qmod=100") {
-        val wT = Window.partitionBy($"q_id")
-          .orderBy($"cos".desc, $"vec_id".asc)
-        scoredPairs(s, dir, QueryChunkRows)
-          .withColumn("rk", row_number().over(wT)).filter($"rk" <= 5)
-          .select($"q_id", $"vec_id")
-      }
+  /** The exhaustive top-5 truth set (q_id, vec_id), a run-durable stage
+    * (round 15, round-16 verdict #2): five recall harnesses (q128/q256/
+    * q265/q373/q383) each paid the n²/100 brute pass independently —
+    * the same truth every time (q40's exact tie rule) — and a fresh
+    * session/JVM now re-pays a columnar read, not the full exhaustive
+    * scan. Staging it is the "materialize the eval truth next to the
+    * index" amortization a real offline-recall pipeline applies;
+    * q40/q43 keep their own plans because the scan IS the operator
+    * under test there. Bump the version on any change to scoredPairs
+    * or the tie rule. */
+  private def truthTop5(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DurableStage.get(s, "ann_truth5", 1,
+      Seq(s"$dir/embeddings.parquet"), salt = s"k=$TruthK;qmod=$QueryMod") {
+      val wT = Window.partitionBy($"q_id")
+        .orderBy($"cos".desc, $"vec_id".asc)
+      scoredPairs(s, dir, QueryChunkRows)
+        .withColumn("rk", row_number().over(wT)).filter($"rk" <= TruthK)
+        .select($"q_id", $"vec_id")
     }
+  }
 
   /** Chunk size exposed for the equivalence test (chunking must never
     * change results, only the broadcast plan). */
@@ -158,6 +157,9 @@ object SimilarityQueries extends QueryModule {
     bandBitsCache.computeIfAbsent(dir,
       _ => Integer.valueOf(bandBits(vecs(s, dir).count()))).intValue
 
+  /** LSH bands per signature. */
+  private val LshBands = 4
+
   /** The banded LSH index frame shared by q41/q134/q135: one row per
     * (vector, band) with the bandBits(n)-bit band value from the
     * sign-random-projection signature (4 bands; 4 bits — the original
@@ -165,14 +167,14 @@ object SimilarityQueries extends QueryModule {
   private def bandedVecs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val bits = bandBitsFor(s, dir)
-    val sigBits = (0 until 4 * bits).map { p =>
+    val sigBits = (0 until LshBands * bits).map { p =>
       val plane = array(planes(p).map(lit): _*)
       when(dot($"v", plane) >= 0, lit(1L << p)).otherwise(0L)
     }.reduce(_.bitwiseOR(_))
     val mask = (1L << bits) - 1
     vecs(s, dir).withColumn("sig", sigBits)
       .select($"vec_id", $"v", $"nrm",
-        posexplode(array((0 until 4).map(b =>
+        posexplode(array((0 until LshBands).map(b =>
           shiftrightunsigned($"sig", b * bits).bitwiseAND(lit(mask))): _*))
           .as(Seq("band_id", "band_val")))
   }
@@ -200,7 +202,7 @@ object SimilarityQueries extends QueryModule {
     // and truncates its lineage: without it, the sizing count() and
     // every per-chunk broadcast branch each re-derive q from the full
     // corpus scan — nChunks+1 extra corpus passes per ANN run.
-    val qc = q.roundBarrier(true)
+    val qc = q.roundBarrier()
     val nChunks = math.max(1L,
       (qc.count() + chunkRows - 1) / chunkRows).toInt
     (0 until nChunks).map { i =>
@@ -417,12 +419,7 @@ object SimilarityQueries extends QueryModule {
     * (ivfWith) stays fully distributed. */
   private[graft] def lloydCentroids(s: SparkSession,
       dir: String): Array[Array[Double]] =
-    lloydMemo.computeIfAbsent(
-      org.apache.spark.sql.GraftBridge.sessionUUID(s) + "@" + dir,
-      _ => fitLloyd(s, dir))
-
-  private val lloydMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Double]]]()
+    SessionCache.value(s, "lloyd_centroids", dir)(fitLloyd(s, dir))
 
   private def fitLloyd(s: SparkSession,
       dir: String): Array[Array[Double]] = {
@@ -997,20 +994,16 @@ object SimilarityQueries extends QueryModule {
   private val GraphBeam = 12
   private val GraphHops = 4
 
-  private val graphCache = new SessionCache
-
-  /** The graph edge frame, double-staged (round-16 verdict #2):
-    * SessionCache bounds the common case, DurableStage the worst —
+  /** The graph edge frame, a durable stage (round-16 verdict #2):
     * q379/q383/q384/q386/q387 all ride this build, and before this a
     * fresh session/JVM re-paid the ~6 s LSH-candidate + top-degree +
     * symmetrize chain per consumer family. Bump the version on any
     * change to buildGraphEdges, bandedVecs, or the plane seeds. */
   private def stagedGraphEdges(s: SparkSession, dir: String): DataFrame =
-    graphCache.get(s, dir)(
-      DurableStage.get(s, "graph_edges", 1,
-        Seq(s"$dir/embeddings.parquet"),
-        salt = s"deg=$GraphDeg;bands=4;bits=${bandBitsFor(s, dir)}")(
-        buildGraphEdges(s, dir)))
+    DurableStage.get(s, "graph_edges", 1,
+      Seq(s"$dir/embeddings.parquet"),
+      salt = s"deg=$GraphDeg;bands=$LshBands;bits=${bandBitsFor(s, dir)}")(
+      buildGraphEdges(s, dir))
 
   /** The bounded-degree neighbor graph (q379's index at rest): per
     * vector its top-GraphDeg cosine neighbors among its LSH band
@@ -1081,11 +1074,10 @@ object SimilarityQueries extends QueryModule {
     * and every downstream beam/top-5 under the (cos desc, vec_id asc)
     * tie rule — are unchanged row-for-row (Round15Spec pins q379/q386
     * equality; the DuckDB replays are untouched). */
-  private val beamCache = new SessionCache
-
   private def beamVisited(s: SparkSession, dir: String, tag: String,
       edges: => DataFrame): DataFrame =
-    beamCache.get(s, s"$dir#$tag")(buildBeamVisited(s, dir, edges))
+    SessionCache.get(s, "beam_visited", s"$dir#$tag")(
+      buildBeamVisited(s, dir, edges))
 
   private def buildBeamVisited(s: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {

@@ -1,70 +1,81 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
 
-/** One persisted frame per (session, sf-dir), with dead-session
-  * eviction — the "materialize the staged table once" discipline a real
-  * pipeline applies to sketch/pair/label/token/weight tables so every
-  * derived query is a read, not a recomputation. Entries owned by a
-  * stopped session are unpersisted and dropped on the next access. */
-private[operators] final class SessionCache {
-  SessionCache.register(this)
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.GraftBridge.sessionUUID
+import org.apache.spark.storage.StorageLevel
 
-  private val m = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.lang.ref.WeakReference[SparkSession], DataFrame)]()
-
-  def get(s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val owner = e.getValue._1.get()
-      if (owner == null || owner.sparkContext.isStopped) {
-        try e.getValue._2.unpersist() catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-    val key = org.apache.spark.sql.GraftBridge.sessionUUID(s) + "@" + dir
-    m.computeIfAbsent(key, _ => (
-      new java.lang.ref.WeakReference(s),
-      build.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))._2
-  }
-
-  private[operators] def release(s: SparkSession): Unit = {
-    val prefix = org.apache.spark.sql.GraftBridge.sessionUUID(s) + "@"
-    val it = m.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) {
-        try e.getValue._2.unpersist() catch { case _: Throwable => () }
-        it.remove()
-      }
-    }
-  }
-}
-
-/** Registry over every staged-frame cache in the engine, so a harness
-  * can bound resident cache mass: with 300+ queries in one JVM the
-  * accumulated staged frames (sketch/pair/suffix/weight tables across
-  * every module) otherwise stay persisted for the whole run — the
-  * late-suite memory pressure behind round 10's phantom bench
-  * regression. `releaseAll` drops every frame owned by the given
-  * session; the next query that needs one re-stages it (same cost the
-  * FIRST query of its family already pays in any fresh session). */
+/** The engine's one session-scoped memo, keyed on (session, stage name,
+  * dir): staged frames (sketch/pair/label/token/weight tables), every
+  * [[DurableStage.get]] read, and fitted artifacts (lloyd, BPE, ULM) —
+  * so every derived query is a read, not a recomputation. Entries of a
+  * stopped or collected session are unpersisted on the next access.
+  * Stages nest (lpa_labels → undirected_edges → weighted_edges), so a
+  * miss builds outside any map operation, under a per-key lock, then
+  * publishes: one build per key under concurrent callers. */
 object SessionCache {
-  private val all =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.lang.ref.WeakReference[SessionCache]]())
+  private final case class Key(session: String, stage: String, dir: String)
+  /** `path`: the durable stage directory the value reads, if any. */
+  private final case class Entry(owner: WeakReference[SparkSession],
+      value: Any, path: Option[String])
 
-  private def register(c: SessionCache): Unit =
-    all.add(new java.lang.ref.WeakReference(c))
+  private val entries = new ConcurrentHashMap[Key, Entry]()
+  /** Per-key build locks; the lock object is the owner reference. */
+  private val locks = new ConcurrentHashMap[Key, WeakReference[SparkSession]]()
 
-  /** Unpersist and drop every staged frame owned by `s`, engine-wide. */
-  def releaseAll(s: SparkSession): Unit = all.synchronized {
-    val it = all.iterator()
-    while (it.hasNext) {
-      val c = it.next().get()
-      if (c == null) it.remove() else c.release(s)
+  /** One persisted (MEMORY_AND_DISK) frame per (session, stage, dir). */
+  private[graft] def get(s: SparkSession, stage: String, dir: String)(
+      build: => DataFrame): DataFrame =
+    memo(s, stage, dir)((build.persist(StorageLevel.MEMORY_AND_DISK), None))
+
+  /** One fitted artifact (an in-JVM value) per (session, stage, dir). */
+  private[graft] def value[T](s: SparkSession, stage: String, dir: String)(
+      build: => T): T =
+    memo(s, stage, dir)((build, None))
+
+  private[operators] def memo[T](s: SparkSession, stage: String,
+      dir: String)(build: => (T, Option[String])): T = {
+    evictDead()
+    val k = Key(sessionUUID(s), stage, dir)
+    def hit = Option(entries.get(k)).map(_.value.asInstanceOf[T])
+    hit.getOrElse {
+      val owner = locks.computeIfAbsent(k, _ => new WeakReference(s))
+      owner.synchronized(hit.getOrElse {
+        val (v, path) = build
+        entries.put(k, Entry(owner, v, path))
+        v
+      })
     }
   }
+
+  /** Unpersist and drop every entry owned by `s`, engine-wide; the next
+    * consumer re-stages it. Harnesses call this to bound resident cache
+    * mass across 300+ queries in one JVM. */
+  def releaseAll(s: SparkSession): Unit = {
+    val id = sessionUUID(s)
+    drop((k, _) => k.session == id)
+  }
+
+  /** Drop every session's entries that read a deleted stage directory. */
+  private[operators] def dropPaths(gone: String => Boolean): Unit =
+    drop((_, e) => e.path.exists(gone))
+
+  private def dead(owner: WeakReference[SparkSession]): Boolean =
+    Option(owner.get()).forall(_.sparkContext.isStopped)
+
+  private def evictDead(): Unit = {
+    drop((_, e) => dead(e.owner))
+    locks.values.removeIf(dead(_))
+  }
+
+  private def drop(p: (Key, Entry) => Boolean): Unit =
+    entries.forEach { (k, e) =>
+      if (p(k, e) && entries.remove(k, e)) e.value match {
+        case df: Dataset[_] =>
+          try df.unpersist() catch { case _: Throwable => () }
+        case _ => ()
+      }
+    }
 }

@@ -524,15 +524,11 @@ object TextQueries extends QueryModule {
 
   /** One fit per (session, sf-dir) — q137 emits the table and q132
     * applies it; the memo keeps the 10 iteration jobs from running
-    * twice per bench pass (driver-side analogue of SessionCache, at
-    * merge-table scale). */
-  private val fitMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]()
+    * twice per bench pass. */
   private def fittedMerges(s: SparkSession, dir: String)
       : Seq[(Int, String, String, Long)] =
-    fitMemo.computeIfAbsent(
-      org.apache.spark.sql.GraftBridge.sessionUUID(s) + "@" + dir,
-      _ => bpeFitSeq(bpeVocab(s, dir), 10))
+    SessionCache.value(s, "bpe_merges", dir)(
+      bpeFitSeq(bpeVocab(s, dir), 10))
 
   /** Sequential BPE merge table (q137): the k=10 fit above, as the
     * driver-checkable artifact. Oracle: the same 10 iterations unrolled
@@ -740,13 +736,9 @@ object TextQueries extends QueryModule {
     * (distributed), recounts piece usage (one groupBy), and collects
     * the ≤ 58-row count table to rebuild the literal scores — the
     * same metadata-scale driver traffic as the BPE merge table. */
-  private val ulmMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Long, Long)]]()
   private def ulmFit(s: SparkSession, dir: String)
       : Seq[(String, Long, Long)] =
-    ulmMemo.computeIfAbsent(
-      org.apache.spark.sql.GraftBridge.sessionUUID(s) + "@" + dir,
-      _ => ulmFitWords(ulmWords(s, dir)))
+    SessionCache.value(s, "ulm_pieces", dir)(ulmFitWords(ulmWords(s, dir)))
 
   /** The fit over ANY (w, freq) frame — split out so the spec can pin
     * the EM round-trip against an independent in-test reference. */

@@ -1175,9 +1175,8 @@ object TimeQueries extends QueryModule {
     * has a fresh UUID so a cache entry keyed on it would never be hit
     * again NOR released by the harness's `releaseAll(root)` — a
     * persisted-block leak, not a reuse. */
-  private val ivSpanCache = new SessionCache
   private def ivSpans(s: SparkSession, dir: String): DataFrame =
-    ivSpanCache.get(s, dir)(ivSpansRaw(s, dir))
+    SessionCache.get(s, "iv_spans", dir)(ivSpansRaw(s, dir))
 
   /** LEFT OUTER interval enrichment (q367) — the verdict's round-14
     * form: KEEP every view span, attach any overlapping other-user
@@ -1389,8 +1388,6 @@ object TimeQueries extends QueryModule {
     * Returns (perView, perDay) where perView = (day, vu, matched)
     * cross-user overlap counts per view span, and perDay =
     * (day, sum_us) the cross-user overlap-micros sum as decimal. */
-  private val ivViewCache = new SessionCache
-  private val ivDayCache = new SessionCache
   private def ivSweep(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
     // Both sweep products staged per (session, dir) — round 17: the
@@ -1398,8 +1395,8 @@ object TimeQueries extends QueryModule {
     // walk (2 day-windows over the exploded endpoint stream) to then
     // aggregate it three different ways. First consumer builds, the
     // twins read (guide §2.4); the harness releases at family end.
-    (ivViewCache.get(s, dir)(buildIvPerView(s, dir)),
-      ivDayCache.get(s, dir)(buildIvPerDay(s, dir)))
+    (SessionCache.get(s, "iv_per_view", dir)(buildIvPerView(s, dir)),
+      SessionCache.get(s, "iv_per_day", dir)(buildIvPerDay(s, dir)))
 
   /** Same-user correction frame shared by the two sweep products:
     * ≤1 span per (user, day, type) ⇒ one equi join. */
@@ -1471,9 +1468,8 @@ object TimeQueries extends QueryModule {
     * the next event — the piecewise-constant profile every sweep
     * aggregate integrates over. Staged per (session, dir) — consumed
     * by the sweep integral AND q382's coverage aggregate. */
-  private val ivRunCache = new SessionCache
   private def ivRuns(s: SparkSession, dir: String): DataFrame =
-    ivRunCache.get(s, dir)(buildIvRuns(s, dir))
+    SessionCache.get(s, "iv_runs", dir)(buildIvRuns(s, dir))
 
   private def buildIvRuns(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

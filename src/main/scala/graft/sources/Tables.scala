@@ -21,14 +21,7 @@ object Tables {
     * at the unchecked bench scale. */
   private val FanMinBytes = 48L * 1024
 
-  /** Conf override for [[FanMinBytes]] (`graft.scan.fan.minBytes`);
-    * negative disables the fan — the A/B knob the fan decision was
-    * measured with. */
-  private def fanMinBytes(s: SparkSession): Long =
-    s.conf.getOption("graft.scan.fan.minBytes").map(_.toLong)
-      .getOrElse(FanMinBytes)
-
-  /** (path # cores # minBytes) → fan-out decision, once per layout. */
+  /** (path # cores) → fan-out decision, once per layout. */
   private val fanCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]
 
@@ -61,8 +54,7 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val df = spark.read.parquet(path)
     val cores = spark.sparkContext.defaultParallelism
-    val minB = fanMinBytes(spark)
-    val fan = fanCache.computeIfAbsent(s"$path#$cores#$minB", _ => {
+    val fan = fanCache.computeIfAbsent(s"$path#$cores", _ => {
       val len = try {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -71,7 +63,7 @@ object Tables {
       // planning only — counts the scan's byte-range splits, no job
       val splits = df.rdd.getNumPartitions
       Integer.valueOf(
-        if (minB >= 0 && len >= minB && splits < cores) cores else 0)
+        if (len >= FanMinBytes && splits < cores) cores else 0)
     })
     if (fan.intValue > 0) df.repartition(fan.intValue) else df
   }

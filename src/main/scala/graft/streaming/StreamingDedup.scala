@@ -46,9 +46,9 @@ object StreamingDedup {
     if (batch.isEmpty) return
     // materialize the (small) batch once: bands, shingles, and the
     // probe all consume it, and a streaming source can't be re-read
-    val b = batch.select(col("doc_id"), col("text")).roundBarrier(true)
-    val nb = DedupQueries.bandsFor(b).roundBarrier(true)
-    val nsh = DedupQueries.shinglesFor(b).roundBarrier(true)
+    val b = batch.select(col("doc_id"), col("text")).roundBarrier()
+    val nb = DedupQueries.bandsFor(b).roundBarrier()
+    val nsh = DedupQueries.shinglesFor(b).roundBarrier()
     val idxBands = s.read.parquet(s"$indexDir/bands")
     val idxSh = s.read.parquet(s"$indexDir/shingles")
     // new×index and new×new candidates in one probe: the index union

@@ -12,14 +12,10 @@ class Round17Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def stageRoot: java.io.File = {
-    val base = spark.conf.getOption(graft.Barrier.DirConfSpark)
-      .orElse(spark.conf.getOption(graft.Barrier.DirConf))
-      .map(_.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props("java.io.tmpdir").stripSuffix("/") +
-        "/graft-stage")
-    new java.io.File(base)
-  }
+  private def stageRoot: java.io.File =
+    new java.io.File(graft.Barrier.checkpointDir(spark)
+      .getOrElse(sys.props("java.io.tmpdir")).stripSuffix("/") +
+      "/graft-stage")
   private def dirsNamed(name: String): Seq[String] =
     Option(stageRoot.list()).map(_.toSeq).getOrElse(Nil)
       .filter(_.startsWith(name + "_v"))
